@@ -9,13 +9,6 @@ package graft.core
   * tantivy bm25.rs:98-132) applied to (fieldnorm, phraseFreq). */
 object Phrase {
 
-  /** "phrase" -> 0, "phrase~N" -> N (mode-string slop encoding). */
-  def slopOfMode(mode: String): Int = {
-    val t = mode.indexOf('~')
-    if (t < 0) 0
-    else mode.substring(t + 1).toIntOption.map(math.min(_, 255)).getOrElse(0)
-  }
-
   /** Count p in pos(0) such that pos(k) contains p + k for all k —
     * the size of [[phraseStarts]] (ONE shared fold: the bit-identity
     * property tests that gate phraseFreq therefore gate the pattern

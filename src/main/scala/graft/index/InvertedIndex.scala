@@ -12,7 +12,9 @@ import graft.core._
   * parquet row groups) -> cogroup with the segment fieldnorm blobs ->
   * per-segment block-max WAND top-k inside mapGroups -> tiny driver-side
   * merge ordered by (score desc, segment asc, docId asc), matching the
-  * reference's DocAddress tie-break (top_collector.rs:59-65).
+  * reference's DocAddress tie-break (top_collector.rs:59-65). The
+  * per-segment machinery (mode decode, term lowering, cursors, scoring,
+  * merge) is SegmentPass, shared with the driver-local Searcher.
   *
   * Collection statistics (N, total tokens -> avg fieldnorm, per-term df)
   * are Catalyst aggregates over the stat/posting tables, per the north
@@ -24,10 +26,23 @@ import graft.core._
   * Top-k is exact whenever segment avg == collection avg (single
   * segment, or uniformly distributed corpora); otherwise it inherits the
   * reference's approximation.
+  *
+  * Fieldnorms stay resident on the driver and broadcast when the corpus
+  * is small enough (1 byte/doc per fnorm field, `maxResidentFnormBytes`
+  * cap, 64 MB for every public caller). The reference keeps fieldnorm
+  * files memory-mapped per shard for serving; this is the Spark analog.
+  * Above the cap, queries fall back to cogrouping the fnorm blobs per
+  * segment (scales to any corpus, pays a shuffle).
   */
-final class InvertedIndex(spark: SparkSession, dir: String,
-                          queryLang: String = "en") extends Serializable {
+final class InvertedIndex private[graft] (spark: SparkSession, dir: String,
+                                          queryLang: String,
+                                          maxResidentFnormBytes: Long)
+    extends Serializable {
   import spark.implicits._
+  import SegmentPass.SegmentCursors
+
+  def this(spark: SparkSession, dir: String, queryLang: String = "en") =
+    this(spark, dir, queryLang, 64L << 20)
 
   // query-side stemmer for field expansion (the reference stems queries
   // in the detected query language; doc-side stemming dispatched per
@@ -78,16 +93,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
 
   /** Tokenize + dedup (the reference's clause deduplication,
     * plan/node.rs:276-305) + 32-term cap (parser/mod.rs:17). */
-  def queryTerms(query: String): Array[String] =
-    Tokenizers.default(query).distinct.take(32)
-
-  /** Fieldnorms resident on the driver + broadcast when the corpus is
-    * small enough (1 byte/doc — 64 MB default cap). The reference keeps
-    * fieldnorm files memory-mapped per shard for serving; this is the
-    * Spark analog. Above the cap, queries fall back to cogrouping the
-    * fnorm blobs per segment (scales to any corpus, pays a shuffle). */
-  private val maxResidentFnormBytes: Long =
-    sys.env.getOrElse("GRAFT_RESIDENT_FNORM_BYTES", (64L << 20).toString).toLong
+  def queryTerms(query: String): Array[String] = SegmentPass.queryTerms(query)
 
   @transient private lazy val residentFnorms
       : Option[org.apache.spark.broadcast.Broadcast[Map[Int, Map[Int, Array[Byte]]]]] = {
@@ -99,19 +105,34 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val residentBytes = fnorms.agg(coalesce(sum($"numDocs"), lit(0L)))
       .head().getLong(0)
     if (residentBytes == 0L || residentBytes > maxResidentFnormBytes) None
-    else {
-      val all = fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
-        seg -> assembleFnorms(chunks.iterator)
-      }
-      Some(spark.sparkContext.broadcast(all))
-    }
+    else Some(spark.sparkContext.broadcast(residentFnormsLocal))
   }
 
   /** All fieldnorm arrays collected to the driver (serving tier). */
   def residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
     fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
-      seg -> assembleFnorms(chunks.iterator)
+      seg -> SegmentPass.assembleFnorms(chunks.iterator)
     }
+
+  /** One pass over the segments holding any of `terms`: `f` gets each
+    * segment's posting rows for those terms and its per-field fnorm
+    * arrays — from the resident broadcast, or cogrouped from the fnorm
+    * table above the resident cap. `f` runs in tasks: it must capture
+    * broadcasts and plain values only, never this index or the session. */
+  private def perSegment[T: org.apache.spark.sql.Encoder](terms: Seq[String])(
+      f: (Int, Array[PostingRow], Map[Int, Array[Byte]]) => Iterator[T]): Array[T] = {
+    val bySeg = postings.filter($"term".isin(terms: _*)).groupByKey(_.segment)
+    (residentFnorms match {
+      case Some(bc) =>
+        bySeg.flatMapGroups { (seg, ps) => f(seg, ps.toArray, bc.value(seg)) }
+      case None =>
+        bySeg.cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
+          val plist = ps.toArray
+          if (plist.isEmpty) Iterator.empty
+          else f(seg, plist, SegmentPass.assembleFnorms(fs))
+        }
+    }).collect()
+  }
 
   /** Posting rows for `terms` via one pushed-down scan, grouped by
     * term (serving tier fetch). */
@@ -146,174 +167,39 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   /** Batch query execution: one distributed pass for many queries —
     * queries x segments fan-out, per-segment top-k, driver merge. */
   def searchBatchRaw(queries: Seq[(String, String, Int, String, Seq[String])])
-      : Map[String, Array[(Int, Int, Float)]] = {
-    val plans = queries.map { case (qid, q, k, mode0, minus) =>
-      // "<mode>+" = field-expanded: each term ORs with its stemmed form,
-      // adjacent pairs add compound bigram terms (the reference's field
-      // expansion + compound augmentation, plan/node.rs:104-127 +
-      // plan/mod.rs:235-300)
-      val expanded = mode0.endsWith("+")
-      val mode = if (expanded) mode0.dropRight(1) else mode0
-      val terms: Seq[String] =
-        if (mode.startsWith("phrase")) Tokenizers.default(q).take(32).toSeq
-        else if (expanded)
-          Fields.expand(Tokenizers.default(q).take(16).toSeq,
-            stemmed = true, bigrams = true, stem = queryStem)
-        else queryTerms(q).toSeq
-      // a minus entry containing a NUL is already a field-prefixed
-      // INDEX term (e.g. a lowered site:/repo: must-not from optics
-      // blocklists) and passes through untokenized — the tokenizer
-      // would destroy the prefix; user text can never contain NUL
-      (qid, terms, k, mode,
-        minus.flatMap(m =>
-          if (m.indexOf('\u0000') >= 0) Seq(m) else queryTerms(m).toSeq).distinct)
-    }
-    searchBatchRawTerms(plans)
-  }
+      : Map[String, Array[(Int, Int, Float)]] =
+    runPlans(queries.map { case (qid, q, k, mode, minus) =>
+      qid -> SegmentPass.plan(q, k, mode, minus, queryStem)
+    })
 
   /** Pre-lowered batch execution: plans carry INDEX terms directly —
     * the entry for term-set queries (prefix/regex/fuzzy/set expansions
     * up to their own caps) where a string round-trip through
     * `queryTerms` would silently re-tokenize and re-cap at 32. */
   def searchBatchRawTerms(plans: Seq[(String, Seq[String], Int, String, Seq[String])])
+      : Map[String, Array[(Int, Int, Float)]] =
+    runPlans(plans.map { case (qid, terms, k, mode, minus) =>
+      qid -> SegmentPass.Plan(terms, minus, k, SegmentPass.parseMode(mode).mode)
+    })
+
+  private def runPlans(plans: Seq[(String, SegmentPass.Plan)])
       : Map[String, Array[(Int, Int, Float)]] = {
-    val allTerms = plans.flatMap(p => p._2 ++ p._5).distinct
+    val allTerms = plans.flatMap(p => p._2.terms ++ p._2.minus).distinct
     if (allTerms.isEmpty || stats.numDocs == 0) return plans.map(p => p._1 -> Array.empty[(Int, Int, Float)]).toMap
-    val dfs = dfOf(allTerms)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val weights: Map[String, Float] = // idf*(1+k1) per term; cache built per task
-      dfs.map { case (t, df) => t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1)) }
+    val st = stats
+    val weights: Map[String, Float] = // idf*(1+k1) per term
+      dfOf(allTerms).map { case (t, df) => t -> (Bm25.idf(df, st.numDocs) * (1.0f + Bm25.K1)) }
     val bPlans = spark.sparkContext.broadcast(plans)
     val bWeights = spark.sparkContext.broadcast(weights)
-
-    val post = postings.filter($"term".isin(allTerms: _*))
-    val postBySeg = post.groupByKey(_.segment)
-
-    val bigramAvg = if (stats.numDocs > 0)
-      math.max(stats.numTokens - stats.numDocs, 1L).toFloat / stats.numDocs.toFloat
-    else 1.0f
-    val trigramAvg = if (stats.numDocs > 0)
-      math.max(stats.numTokens - 2L * stats.numDocs, 1L).toFloat / stats.numDocs.toFloat
-    else 1.0f
-
-    def scoreSegment(seg: Int, plist: Array[PostingRow],
-                     fnArrs: Map[Int, Array[Byte]])
-        : Iterator[(String, Int, Int, Float)] = {
-        {
-          val byTerm: Map[String, Array[PostingRow]] =
-            plist.groupBy(_.term).map { case (t, rows) =>
-              t -> rows.sortBy(_.shard)
-            }
-          def cursor(term: String): Option[TermCursor] =
-            byTerm.get(term).map { rows =>
-              val field = Fields.fieldOf(term)
-              val av = if (field == Fields.Bigram) bigramAvg
-                       else if (field == Fields.Trigram) trigramAvg
-                       else avgFn
-              val fnA = fnArrs(Fields.fnormFieldOf(field))
-              val wt = new Bm25Weight(bWeights.value(term), av)
-              if (rows.length == 1)
-                new PostingsCursor(rows(0).toData, fnA, wt)
-              else
-                new ChainedCursor(rows.map(r => new PostingsCursor(r.toData, fnA, wt)))
-            }
-          bPlans.value.iterator.flatMap { case (qid, terms, k, mode, minus) =>
-            val cs = terms.flatMap(t => cursor(t))
-            if (cs.isEmpty) Iterator.empty
-            else {
-              val negs = minus.flatMap(t => cursor(t)).toArray
-              @inline def excluded(doc: Int): Boolean = {
-                var i = 0
-                while (i < negs.length) {
-                  val n = negs(i)
-                  if (n.doc == doc || (n.doc < doc && n.seek(doc) == doc)) return true
-                  i += 1
-                }
-                false
-              }
-              val topk = new TopK(k)
-              mode match {
-                case pm if pm.startsWith("phrase") =>
-                  // every occurrence needs its own cursor; a term absent
-                  // from this segment means no phrase match here.
-                  // "phrase~N" = sloppy phrase with slop budget N
-                  if (cs.length == terms.length) {
-                    var wsum = 0.0f
-                    terms.foreach(t => wsum += bWeights.value(t))
-                    val pw = new Bm25Weight(wsum, avgFn)
-                    Phrase.run(cs, pw, fnArrs(Fields.Content),
-                      (d, _, s) => if (!excluded(d)) topk.push(d, s),
-                      slop = Phrase.slopOfMode(pm))
-                  }
-                case "and" =>
-                  // a query term absent from this segment means NO doc
-                  // here contains all terms — intersecting only the
-                  // present cursors would return partial matches (the
-                  // phrase branch has the same guard)
-                  if (cs.length == terms.length)
-                    BlockWand.intersect(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-                case "dismax" =>
-                  BlockWand.exhaustiveCombine(cs, 0.0f,
-                    (d, s) => if (!excluded(d)) topk.push(d, s))
-                case "exhaustive" =>
-                  BlockWand.exhaustiveUnion(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-                case "bitset" => // horizon-buffered union (bit-identical)
-                  BlockWand.bitsetUnion(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-                case _ =>
-                  if (negs.isEmpty)
-                    BlockWand.run(cs, Float.MinValue, (d, s) => topk.push(d, s))
-                  else
-                    BlockWand.run(cs, Float.MinValue,
-                      (d, s) => if (excluded(d)) topk.threshold else topk.push(d, s))
-              }
-              topk.sorted.iterator.map(h => (qid, seg, h.doc, h.score))
-            }
-          }
-        }
+    val byQid = perSegment[(String, Int, Int, Float)](allTerms) { (seg, plist, fnArrs) =>
+      val cursors = new SegmentCursors(plist, fnArrs, st)
+      bPlans.value.iterator.flatMap { case (qid, plan) =>
+        SegmentPass.topK(plan, cursors, bWeights.value).iterator.map(h => (qid, seg, h.doc, h.score))
       }
-
-    val perSeg: Dataset[(String, Int, Int, Float)] = residentFnorms match {
-      case Some(bc) =>
-        postBySeg.flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else scoreSegment(seg, plist, bc.value(seg))
-        }
-      case None =>
-        postBySeg.cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else scoreSegment(seg, plist, assembleFnorms(fs))
-        }
-    }
-
-    val collected = perSeg.collect()
-    val byQid = collected.groupBy(_._1)
-    plans.map { case (qid, _, k, _, _) =>
-      val merged = byQid.getOrElse(qid, Array.empty)
-        .sortBy(t => (-t._4, t._2, t._3))(
-          Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-        .take(k)
-        .map(t => (t._2, t._3, t._4))
-      qid -> merged
+    }.groupBy(_._1)
+    plans.map { case (qid, plan) =>
+      qid -> SegmentPass.merge(byQid.getOrElse(qid, Array.empty).map(t => (t._2, t._3, t._4)), plan.k)
     }.toMap
-  }
-
-  /** Per-field fnorm arrays of one segment (chunk encodes the field in
-    * its high bits; see Fields). */
-  private def assembleFnorms(fs: Iterator[FnormRow]): Map[Int, Array[Byte]] = {
-    fs.toArray.groupBy(_.chunk >> Fields.FnormFieldShift).map { case (field, rows) =>
-      val chunks = rows.sortBy(_.chunk)
-      val total = chunks.map(_.numDocs).sum
-      val out = new Array[Byte](total)
-      var off = 0
-      chunks.foreach { c =>
-        System.arraycopy(c.fnorms, 0, out, off, c.numDocs)
-        off += c.numDocs
-      }
-      field -> out
-    }
   }
 
   /** Resolve raw hits against the doc table (broadcast hash join on the
@@ -391,19 +277,16 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     if (runs.isEmpty || stats.numDocs == 0) return Array.empty
     val allTerms = runs.flatten.distinct
     val bCand = candidates.map(c => spark.sparkContext.broadcast(c))
+    val st = stats
 
     def segPass(seg: Int, plist: Array[PostingRow],
                 docLens: Array[Int]): Iterator[(Int, Int)] = {
-      val byTerm = plist.groupBy(_.term)
+      // matching never scores: zero fnorms, unit weight
+      val cursors = new SegmentCursors(plist,
+        Map(Fields.Content -> new Array[Byte](docLens.length)), st)
       val dummy = new Bm25Weight(1.0f, 1.0f)
-      val fnA = new Array[Byte](docLens.length) // matching never scores
-      def cursor(t: String): Option[TermCursor] = byTerm.get(t).map { rows =>
-        val sorted = rows.sortBy(_.shard)
-        if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, dummy)
-        else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, dummy)))
-      }
       // one cursor per token OCCURRENCE (a term may repeat across runs)
-      val runCursors: List[Seq[TermCursor]] = runs.map(_.flatMap(t => cursor(t)))
+      val runCursors: List[Seq[TermCursor]] = runs.map(_.flatMap(t => cursors(t)(_ => dummy)))
       if (runCursors.zip(runs).exists { case (cs, r) => cs.length != r.length })
         return Iterator.empty // some pattern term absent from this segment
       val lastIdx = runCursors.length - 1
@@ -629,14 +512,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       val tree = BooleanQuery.Bool(
         must = ops.map(BooleanQuery.Term.apply),
         should = queryTerms(body).toSeq.map(BooleanQuery.Term.apply),
-        // a NUL-carrying minus is an already-lowered field term (a
-        // negated operator, or safe:on's quality must-not) and passes
-        // through untokenized — queryTerms would split it into plain
-        // text and silently drop the must-not (same rule as the
-        // searchBatchRaw minus path)
-        mustNot = minus.flatMap(m =>
-            if (m.indexOf('\u0000') >= 0) Seq(m) else queryTerms(m).toSeq)
-          .distinct.map(BooleanQuery.Term.apply))
+        mustNot = SegmentPass.lowerMinus(minus).map(BooleanQuery.Term.apply))
       resolve(searchBool(tree, k), k)
     }
   }
@@ -748,63 +624,22 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     docs.filter($"numTokens".between(minTokens, maxTokens))
 
   /** Boosted multi-clause query (reference BoostQuery score algebra:
-    * weight scales linearly, bounds scale with it, WAND unchanged). */
+    * weight scales linearly, bounds scale with it, WAND unchanged).
+    * Cursors go in term-sorted order. */
   def searchBoosted(clauses: Seq[(String, Float)], k: Int): Array[(Int, Int, Float)] = {
     val terms = clauses.map(_._1).distinct
     if (terms.isEmpty || stats.numDocs == 0) return Array.empty
     val boosts = clauses.toMap
-    val dfs = dfOf(terms)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val weights = dfs.map { case (t, df) =>
-      t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1) * boosts.getOrElse(t, 1.0f))
+    val st = stats
+    val weights = dfOf(terms).map { case (t, df) =>
+      t -> (Bm25.idf(df, st.numDocs) * (1.0f + Bm25.K1) * boosts.getOrElse(t, 1.0f))
     }
     val bW = spark.sparkContext.broadcast(weights)
-    val bgAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
-    val tgAvg = if (N > 0)
-      math.max(stats.numTokens - 2L * N, 1L).toFloat / N.toFloat else 1.0f
-    val post = postings.filter($"term".isin(terms: _*))
-    val perSeg = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          boostedSegment(seg, ps.toArray, bc.value(seg), bW.value, avgFn, k,
-            bgAvg, tgAvg)
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else boostedSegment(seg, plist, assembleFnorms(fs), bW.value, avgFn, k,
-            bgAvg, tgAvg)
-        }
-    }).collect()
-    perSeg.sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
-  }
-
-  private def boostedSegment(seg: Int, plist: Array[PostingRow],
-                             fnArrs: Map[Int, Array[Byte]],
-                             weights: Map[String, Float], avgFn: Float, k: Int,
-                             bigramAvg: Float = 1.0f, trigramAvg: Float = 1.0f)
-      : Iterator[(Int, Int, Float)] = {
-    val cursors = plist.groupBy(_.term).toSeq.sortBy(_._1).map { case (t, rows) =>
-      // per-field norms like scoreSegment: an n-gram shadow term in a
-      // boosted clause scores with ITS field's average and fnorm bytes
-      val field = Fields.fieldOf(t)
-      val av = if (field == Fields.Bigram) bigramAvg
-               else if (field == Fields.Trigram) trigramAvg
-               else avgFn
-      val wt = new Bm25Weight(weights(t), av)
-      val fnA = fnArrs(Fields.fnormFieldOf(field))
-      val sorted = rows.sortBy(_.shard)
-      if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, wt)
-      else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, wt)))
-    }
-    val topk = new TopK(k)
-    BlockWand.run(cursors, Float.MinValue, (d, s) => topk.push(d, s))
-    topk.sorted.iterator.map(h => (seg, h.doc, h.score))
+    val plan = SegmentPass.Plan(terms.sorted, Nil, k, SegmentPass.Mode.Or)
+    SegmentPass.merge(perSegment[(Int, Int, Float)](terms) { (seg, plist, fnArrs) =>
+      SegmentPass.topK(plan, new SegmentCursors(plist, fnArrs, st), bW.value)
+        .iterator.map(h => (seg, h.doc, h.score))
+    }, k)
   }
 
   /** Signal-framework ranking: recall via expanded WAND, then score
@@ -847,10 +682,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     // the empty-candidate check comes BEFORE the dfOf aggregate below —
     // no point launching a cluster job to rank nothing
     if (base.isEmpty || cands.isEmpty || stats.numDocs == 0) return Array.empty
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val bigramAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
+    val st = stats
+    val N = st.numDocs
     val stems = base.map(t => Fields.StemPrefix + queryStem(t))
     val bigrams = if (base.length >= 2)
       base.sliding(2).map(p => Fields.bigramTerm(p(0), p(1))).toSeq else Nil
@@ -874,25 +707,18 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         : Iterator[(Int, Int, Double, Double, Double, Double, Double, Double, Double)] = {
       val candDocs = bCands.value.getOrElse(seg, Array.empty)
       if (candDocs.isEmpty) return Iterator.empty
-      val byTerm = plist.groupBy(_.term)
+      val cursors = new SegmentCursors(plist, fnArrs, st)
       val dfsV = bDfs.value
-      def cursor(term: String, field: Int): Option[(TermCursor, Bm25Weight, Bm25FWeight, Float)] =
-        byTerm.get(term).map { rows =>
-          val av = if (field == Fields.Bigram) bigramAvg else avgFn
-          val df = dfsV.getOrElse(term, 0L)
-          val idf = Bm25.idf(df, N)
-          val bw = new Bm25Weight(idf * (1.0f + Bm25.K1), av)
-          val text = if (field == Fields.Content) term
-            else term.substring(2) // strip the 2-char field prefix
-          val sharedIdf = Bm25.idf(dfsV.getOrElse(text, 0L), N)
-          val bf = new Bm25FWeight(sharedIdf, av, fCoeffs.getOrElse(field, 0.0f))
-          val fnA = fnArrs(Fields.fnormFieldOf(field))
-          val sorted = rows.sortBy(_.shard)
-          val c: TermCursor =
-            if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, bw)
-            else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, bw)))
-          (c, bw, bf, idf)
-        }
+      def cursor(term: String, field: Int): Option[(TermCursor, Bm25Weight, Bm25FWeight, Float)] = {
+        val idf = Bm25.idf(dfsV.getOrElse(term, 0L), N)
+        val text = if (field == Fields.Content) term
+          else term.substring(2) // strip the 2-char field prefix
+        val sharedIdf = Bm25.idf(dfsV.getOrElse(text, 0L), N)
+        val av = st.avgFieldNormOf(field)
+        val bw = new Bm25Weight(idf * (1.0f + Bm25.K1), av)
+        val bf = new Bm25FWeight(sharedIdf, av, fCoeffs.getOrElse(field, 0.0f))
+        cursors(term)(_ => bw).map(c => (c, bw, bf, idf))
+      }
       val contentCs = base.flatMap(cursor(_, Fields.Content))
       val stemCs = stems.flatMap(cursor(_, Fields.Stemmed))
       val bigramCs = bigrams.flatMap(cursor(_, Fields.Bigram))
@@ -935,19 +761,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       }
     }
 
-    val post = postings.filter($"term".isin(allTerms: _*))
-    val perCand: Array[(Int, Int, Double, Double, Double, Double, Double, Double, Double)] = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else sigSeg(seg, plist, bc.value(seg))
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else sigSeg(seg, plist, assembleFnorms(fs))
-        }
-    }).collect()
+    val perCand = perSegment(allTerms)(sigSeg)
 
     // query-independent signals from the doc table (broadcast the small
     // candidate set into the join)
@@ -1048,34 +862,19 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val terms = BooleanQuery.allTerms(node)
     val posTerms = BooleanQuery.positiveTerms(node).toSet
     if (posTerms.isEmpty || stats.numDocs == 0) return Array.empty
-    val dfs = dfOf(terms)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val weights = dfs.map { case (t, df) => t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1)) }
+    val st = stats
+    val weights = dfOf(terms).map { case (t, df) =>
+      t -> (Bm25.idf(df, st.numDocs) * (1.0f + Bm25.K1))
+    }
     val bW = spark.sparkContext.broadcast(weights)
     val bNode = spark.sparkContext.broadcast(node)
     val bPos = spark.sparkContext.broadcast(posTerms)
-    val bgAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
-    val tgAvg = if (N > 0)
-      math.max(stats.numTokens - 2L * N, 1L).toFloat / N.toFloat else 1.0f
 
     def boolSegment(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]])
         : Iterator[(Int, Int, Float)] = {
+      val segCursors = new SegmentCursors(plist, fnArrs, st)
       val cursors: Map[String, TermCursor] =
-        plist.groupBy(_.term).map { case (t, rows) =>
-          // per-field norms like scoreSegment: an n-gram shadow term in
-          // a boolean tree scores with ITS field's average and bytes
-          val field = Fields.fieldOf(t)
-          val av = if (field == Fields.Bigram) bgAvg
-                   else if (field == Fields.Trigram) tgAvg
-                   else avgFn
-          val fnA = fnArrs(Fields.fnormFieldOf(field))
-          val wt = new Bm25Weight(bW.value(t), av)
-          val sorted = rows.sortBy(_.shard)
-          t -> (if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, wt)
-                else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, wt))))
-        }
+        terms.flatMap(t => segCursors.bm25(t, bW.value).map(t -> _)).toMap
       val drivers = cursors.filter(c => bPos.value.contains(c._1)).values.toArray
       if (drivers.isEmpty) return Iterator.empty
       @inline def contains(c: TermCursor, doc: Int): Boolean =
@@ -1100,23 +899,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       topk.sorted.iterator.map(h => (seg, h.doc, h.score))
     }
 
-    val post = postings.filter($"term".isin(terms: _*))
-    val perSeg = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else boolSegment(seg, plist, bc.value(seg))
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else boolSegment(seg, plist, assembleFnorms(fs))
-        }
-    }).collect()
-    perSeg.sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
+    SegmentPass.merge(perSegment(terms)(boolSegment), k)
   }
 
   /** BM25F ranked search (re-derivation of the reference's two-stage
@@ -1152,12 +935,9 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       cands.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sorted }
     // shared idf from the content field
     val dfs = dfOf(fieldTerms.map(_._3).distinct)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val bigramAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
+    val st = stats
     val plan: Seq[(String, Int, Float)] = fieldTerms.map { case (term, field, idfText) =>
-      (term, field, Bm25.idf(dfs.getOrElse(idfText, 0L), N))
+      (term, field, Bm25.idf(dfs.getOrElse(idfText, 0L), st.numDocs))
     }
     val bPlan = spark.sparkContext.broadcast(plan)
     val bCands = spark.sparkContext.broadcast(candBySeg)
@@ -1167,25 +947,16 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         : Iterator[(Int, Int, Float)] = {
       val candDocs = bCands.value.getOrElse(seg, Array.empty)
       if (candDocs.isEmpty) return Iterator.empty
-      val byTerm = plist.groupBy(_.term)
+      val cursors = new SegmentCursors(plist, fnArrs, st)
       // cursors in plan order => deterministic f32 summation order
-      val cs: Array[(TermCursor, Int)] = bPlan.value.flatMap { case (term, field, idf) =>
-        byTerm.get(term).map { rows =>
-          val av = if (field == Fields.Bigram) bigramAvg else avgFn
-          val w = new Bm25FWeight(idf, av, bCoeffs.value(field))
-          val fnA = fnArrs(Fields.fnormFieldOf(field))
-          val sorted = rows.sortBy(_.shard)
-          val c: TermCursor =
-            if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, w)
-            else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, w)))
-          (c, field)
-        }
+      val cs: Array[TermCursor] = bPlan.value.flatMap { case (term, field, idf) =>
+        cursors(term)(new Bm25FWeight(idf, _, bCoeffs.value(field)))
       }.toArray
       candDocs.iterator.map { doc =>
         var score = 0.0f
         var i = 0
         while (i < cs.length) {
-          val c = cs(i)._1
+          val c = cs(i)
           // posting_contains: ascending re-walk (computer/mod.rs:154-160)
           if (c.doc == doc || (c.doc < doc && c.seek(doc) == doc)) score += c.score
           i += 1
@@ -1194,24 +965,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       }
     }
 
-    val post = postings.filter($"term".isin(plan.map(_._1): _*))
-    val perSeg = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else scoreSeg(seg, plist, bc.value(seg))
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else scoreSeg(seg, plist, assembleFnorms(fs))
-        }
-    }).collect()
-    perSeg.filter(_._3 > 0.0f)
-      .sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
+    SegmentPass.merge(perSegment(plan.map(_._1))(scoreSeg).filter(_._3 > 0.0f), k)
   }
 
   /** Bucket-deduped search (reference BucketCollector,
@@ -1418,25 +1172,29 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val terms = queryTerms(query)
     if (terms.isEmpty || stats.numDocs == 0) return (Array.empty, 0L, false)
     val dfs = dfOf(terms.toSeq)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
+    val st = stats
+    val N = st.numDocs
     val weights = dfs.map { case (t, df) => t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1)) }
     val bW = spark.sparkContext.broadcast(weights)
-    val post = postings.filter($"term".isin(terms.toSeq: _*))
+    val sortedTerms = terms.sorted.toSeq
     val budget = maxDocsPerSegment
-    val fnormsBc = residentFnorms
-    val perSeg: Array[(Int, Int, Float, Int, Boolean)] = (fnormsBc match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          approxSegment(seg, ps.toArray, bc.value(seg), bW.value, avgFn, k, budget)
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else approxSegment(seg, plist, assembleFnorms(fs), bW.value, avgFn, k, budget)
-        }
-    }).collect()
+    val perSeg = perSegment[(Int, Int, Float, Int, Boolean)](terms.toSeq) { (seg, plist, fnArrs) =>
+      val segCursors = new SegmentCursors(plist, fnArrs, st)
+      // term-sorted cursors
+      def cursors(): Seq[TermCursor] = sortedTerms.flatMap(segCursors.bm25(_, bW.value))
+      val saturated = fnArrs(Fields.Content).length > budget
+      val cs = if (saturated) cursors().map(new TruncatedCursor(_, budget)) else cursors()
+      val topk = new TopK(k)
+      BlockWand.run(cs, Float.MinValue, (d, s) => topk.push(d, s))
+      // exact in-segment match count only when the horizon didn't bite
+      // (otherwise the caller reports the collection-level estimate and
+      // this walk would defeat the short circuit)
+      val matched = if (saturated) 0 else BlockWand.unionCount(cursors()).toInt
+      // sentinel row (doc = -1) carries count/saturation even when the
+      // horizon leaves this segment with no top-k hits
+      Iterator.single((seg, -1, 0.0f, matched, saturated)) ++
+        topk.sorted.iterator.map(h => (seg, h.doc, h.score, matched, saturated))
+    }
     val saturated = perSeg.exists(_._5)
     val exactCount = perSeg.groupBy(_._1).map { case (_, rows) => rows.head._4.toLong }.sum
     val count = if (!saturated) exactCount
@@ -1446,40 +1204,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       terms.foreach(t => est *= dfs.getOrElse(t, 0L).toDouble / N.toDouble)
       math.round(est)
     }
-    val hits = perSeg.filter(_._2 >= 0).map(r => (r._1, r._2, r._3))
-      .sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
+    val hits = SegmentPass.merge(perSeg.filter(_._2 >= 0).map(r => (r._1, r._2, r._3)), k)
     (hits, count, saturated)
-  }
-
-  private def approxSegment(seg: Int, plist: Array[PostingRow],
-                            fnArrs: Map[Int, Array[Byte]],
-                            weights: Map[String, Float], avgFn: Float,
-                            k: Int, budget: Int)
-      : Iterator[(Int, Int, Float, Int, Boolean)] = {
-    val byTerm = plist.groupBy(_.term)
-    def cursors(): Seq[TermCursor] = byTerm.toSeq.sortBy(_._1).map { case (t, rows) =>
-      val wt = new Bm25Weight(weights(t), avgFn)
-      val fnA = fnArrs(Fields.Content)
-      val sorted = rows.sortBy(_.shard)
-      if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, wt)
-      else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, wt)))
-    }
-    val nDocs = fnArrs(Fields.Content).length
-    val saturated = nDocs > budget
-    val cs: Seq[TermCursor] =
-      if (saturated) cursors().map(new TruncatedCursor(_, budget)) else cursors()
-    val topk = new TopK(k)
-    BlockWand.run(cs, Float.MinValue, (d, s) => topk.push(d, s))
-    // exact in-segment match count only when the horizon didn't bite
-    // (otherwise the caller reports the collection-level estimate and
-    // this walk would defeat the short circuit)
-    val matched = if (saturated) 0 else BlockWand.unionCount(cursors()).toInt
-    // sentinel row (doc = -1) carries count/saturation even when the
-    // horizon leaves this segment with no top-k hits
-    Iterator.single((seg, -1, 0.0f, matched, saturated)) ++
-      topk.sorted.iterator.map(h => (seg, h.doc, h.score, matched, saturated))
   }
 }
 

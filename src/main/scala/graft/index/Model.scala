@@ -66,6 +66,17 @@ final case class SegStatRow(segment: Int, numDocs: Long, numTokens: Long,
 /** Collection-level statistics (Catalyst aggregates over SegStatRow). */
 final case class CollectionStats(numDocs: Long, numTokens: Long, numSegments: Int) {
   def avgFieldNorm: Float = numTokens.toFloat / numDocs.toFloat
+
+  /** Average fieldnorm of a field's scoring array: an n-gram shadow
+    * field holds n-1 fewer tokens per doc than the content field. */
+  def avgFieldNormOf(field: Int): Float =
+    if (field == Fields.Bigram) nGramAvg(1L)
+    else if (field == Fields.Trigram) nGramAvg(2L)
+    else avgFieldNorm
+
+  private def nGramAvg(shorter: Long): Float =
+    if (numDocs > 0) math.max(numTokens - shorter * numDocs, 1L).toFloat / numDocs.toFloat
+    else 1.0f
 }
 
 /** Final query hit. */

@@ -92,12 +92,7 @@ object SearchPipeline {
         val tree = BooleanQuery.Bool(
           must = ops.map(BooleanQuery.Term.apply),
           should = idx.queryTerms(body).toSeq.map(BooleanQuery.Term.apply),
-          // NUL-carrying minus entries are already-lowered field terms
-          // (negated operators, safe:on) and pass through untokenized,
-          // like the searchBatchRaw and searchParsed minus paths
-          mustNot = (minus.flatMap(m =>
-              if (m.indexOf('\u0000') >= 0) Seq(m) else idx.queryTerms(m).toSeq)
-            ++ blockedTerms)
+          mustNot = (SegmentPass.lowerMinus(minus) ++ blockedTerms)
             .distinct.map(BooleanQuery.Term.apply))
         // score the ORIGINAL tree: factoring preserves the match set
         // but deduplicates shared clauses, so a factored tree scores a

@@ -106,10 +106,11 @@ class PhraseSlopSpec extends AnyFunSuite {
     }
   }
 
-  test("slopOfMode decodes the mode-string encoding") {
-    assert(Phrase.slopOfMode("phrase") == 0)
-    assert(Phrase.slopOfMode("phrase~2") == 2)
-    assert(Phrase.slopOfMode("phrase~999") == 255)
-    assert(Phrase.slopOfMode("or") == 0)
+  test("the mode parser decodes the phrase slop encoding") {
+    import graft.index.SegmentPass.{Mode, parseMode}
+    assert(parseMode("phrase").mode == Mode.Phrase(0))
+    assert(parseMode("phrase~2").mode == Mode.Phrase(2))
+    assert(parseMode("phrase~999").mode == Mode.Phrase(255))
+    assert(parseMode("or").mode == Mode.Or)
   }
 }
