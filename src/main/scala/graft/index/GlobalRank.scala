@@ -47,8 +47,7 @@ object GlobalRank {
     * recompute is idempotent). */
   def write(spark: SparkSession, indexDir: String, partitions: Int = 0): Unit = {
     import spark.implicits._
-    val docs = spark.read
-      .parquet(s"${IndexBuilder.dataDir(indexDir)}/kind=doc")
+    val docs = IndexBuilder.readKind(spark, indexDir, "doc")
       .select("doc.*").as[DocRow]
     val keyed = docs
       .select($"segment", $"docId", $"sortKey", $"repo", $"path", $"commit")

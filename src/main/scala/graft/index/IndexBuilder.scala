@@ -1,7 +1,11 @@
 package graft.index
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.CollectionAccumulator
 
 import graft.core.{Bm25Weight, FieldNorm, PostingListData, Tokenizers}
 
@@ -447,6 +451,7 @@ object IndexBuilder {
     // (single-batch builds scan once)
     var built = 0
     var skipped = 0
+    val written = Array.newBuilder[SegStatRow]
     (0 until S).grouped(cfg.segmentsPerBatch).zipWithIndex.foreach { case (batch, bi) =>
       val tag = s"b$bi"
       if (batchCommitted(outDir, tag)) { skipped += batch.size }
@@ -455,42 +460,32 @@ object IndexBuilder {
         val slice =
           if (batch.size == S) tagged
           else tagged.filter(t => batchSet.contains(t.segment))
-        // over-partition well beyond the segment count: hash placement of S
-        // segment keys into exactly S partitions leaves ~37% empty and some
-        // with 3-4 segments (straggler waves); at 4x, surplus partitions are
-        // cheap no-ops and the max per-task load stays ~1-2 segments.
-        // DATA-driven, never cluster-size-driven: the partition count is a
-        // property of the dataset (like files.maxPartitionBytes sizing), so
-        // the same build is bit- and plan-identical at any executor count —
-        // the north-rule N-vs-4N comparison must run the IDENTICAL job at
-        // both levels (a cores-derived count was tried and distorted the
-        // ratio by giving the small level a cheaper job).
-        val parts = sys.env.get("GRAFT_BUILD_PARTS").map(_.toInt)
-          .getOrElse(math.max(spark.sparkContext.defaultParallelism,
-            math.min(batch.size * 4, 4096)))
+        // one task per segment: the batch's ids are consecutive, so
+        // writeSegments' pmod placement over batch.size partitions is a
+        // bijection — no empty tasks, no two segments in one task. The
+        // count is a property of the data, never of the cluster, so the
+        // same build runs the identical job at any executor count (the
+        // north-rule N-vs-4N comparison depends on that).
         val staged = s"${stagingDir(outDir)}/$tag"
-        val tw0 = System.nanoTime()
-        writeSegments(slice, parts, staged, cfg)
-        val ta0 = System.nanoTime()
+        val stats = writeSegments(slice, batch.size, staged, cfg)
         adoptStaged(staged, outDir, tag)
-        val tr0 = System.nanoTime()
 
         // commit manifests for this batch (checkpoint + lineage)
-        val stats = readStats(spark, outDir).filter(s => batchSet.contains(s.segment))
-        if (sys.env.getOrElse("GRAFT_BUILD_TIMING", "0") == "1")
-          println(f"GRAFT_TIMING write=${(ta0 - tw0) / 1e9}%.2f adopt=${(tr0 - ta0) / 1e9}%.2f stats=${(System.nanoTime() - tr0) / 1e9}%.2f")
         stats.foreach(writeManifest(outDir, _))
         // segments with zero input rows still need a manifest to be "done"
         val seen = stats.map(_.segment).toSet
         batch.filterNot(seen).foreach { seg =>
           writeManifest(outDir, SegStatRow(seg, 0, 0, 0, 0, "0" * 64, 0))
         }
+        written ++= stats
         commitBatch(outDir, tag, s""""segments":${batch.size}""")
         built += batch.size
       }
     }
 
-    val allStats = readStats(spark, outDir)
+    // the write jobs returned every built segment's stats; only a resume
+    // that skipped committed batches needs the stat table for the rest
+    val allStats = if (skipped > 0) readStats(spark, outDir) else written.result()
     // serving-tier global static-rank ordinal: derived data computed
     // AFTER the batch markers (a crash here just loses the derived
     // table; the index itself is already committed, and rankSignals
@@ -513,18 +508,41 @@ object IndexBuilder {
     * across retries). */
   private def readStats(spark: SparkSession, outDir: String): Array[SegStatRow] = {
     import spark.implicits._
-    val p = s"${dataDir(outDir)}/kind=stat"
-    if (!new java.io.File(p).exists()) Array.empty
-    else spark.read.parquet(p).select("stat.*").as[SegStatRow].collect()
+    if (!new java.io.File(s"${dataDir(outDir)}/kind=stat").exists()) Array.empty
+    else readKind(spark, outDir, "stat").select("stat.*").as[SegStatRow].collect()
   }
+
+  /** Columns of every `kind=<k>` parquet file: the BuildRow union minus
+    * its `kind` partition column. Every writer (build, live append,
+    * merge) emits BuildRow, so the schema is known without a footer. */
+  private[graft] val KindSchema: StructType = {
+    val full = Encoders.product[BuildRow].schema
+    StructType(full.fields.filterNot(_.name == "kind"))
+  }
+
+  /** Reader of one row kind of the index at `indexDir` with the known
+    * schema: `spark.read.parquet` without a schema pays a Spark job to
+    * infer it from the footers, once per table per reader. */
+  private[graft] def readKind(spark: SparkSession, indexDir: String, kind: String): DataFrame =
+    spark.read.schema(KindSchema).parquet(s"${dataDir(indexDir)}/kind=$kind")
 
   /** Shared segment-build stage: shuffle to segments, sort, accumulate,
     * serialize, write parquet partitioned by row kind into
     * `<stageOut>/kind=*` (overwrite — callers stage then adopt, see
     * adoptStaged). Used by the batch build and the live (streaming)
-    * micro-batch append. */
+    * micro-batch append.
+    *
+    * Segment s goes to task s mod `parts`: callers pass `parts` ids in
+    * a consecutive run, so each task builds exactly one segment (any
+    * other id set still builds correctly, several segments to a task).
+    * Returns
+    * the written segments' stat rows, gathered by the write job itself
+    * (an accumulator fed where each stat row is emitted), so callers
+    * need no read-back of the stat table. Spark applies a result task's
+    * accumulator update once and drops failed attempts; the rows are
+    * deduplicated by segment all the same. */
   def writeSegments(tagged: Dataset[Tagged], parts: Int, stageOut: String,
-                    cfg: Config): Unit = {
+                    cfg: Config): Array[SegStatRow] = {
     val maxShard = cfg.maxPostingsPerShard
     val fnChunk = cfg.fnormChunkSize
     val recordPos = cfg.recordPositions
@@ -537,17 +555,21 @@ object IndexBuilder {
     val keyPhrasesF = cfg.indexKeyPhrases
     val linksF = cfg.indexLinks
     val qualityF = cfg.indexQuality
-    import tagged.sparkSession.implicits._
+    val spark = tagged.sparkSession
+    import spark.implicits._
+    val statAcc = spark.sparkContext.collectionAccumulator[SegStatRow]("segment stats")
     tagged
-      .repartition(parts, col("segment"))
+      .repartitionById(parts, pmod(col("segment"), lit(parts)))
       .sortWithinPartitions(col("segment"), col("sortKey").desc,
         col("repo"), col("path"), col("commit"))
       .mapPartitions { it =>
-        new SegmentEmitter(it, maxShard, fnChunk, recordPos, stemmedF, bigramF,
-          trigramF, simhashF, metaF, jsonF, keyPhrasesF, linksF, qualityF)
+        new SegmentEmitter(it, statAcc, maxShard, fnChunk, recordPos, stemmedF,
+          bigramF, trigramF, simhashF, metaF, jsonF, keyPhrasesF, linksF, qualityF)
       }
       .write.mode(SaveMode.Overwrite).partitionBy("kind")
       .parquet(stageOut)
+    statAcc.value.asScala.groupBy(_.segment).values.map(_.head)
+      .toArray.sortBy(_.segment)
   }
 
   private def writeManifest(outDir: String, s: SegStatRow): Unit = {
@@ -561,7 +583,9 @@ object IndexBuilder {
 
   /** Streams a sorted partition, building one segment at a time fully
     * in RAM and flushing it as doc/fnorm/posting/stat rows. */
-  private final class SegmentEmitter(it: Iterator[Tagged], maxShard: Int,
+  private final class SegmentEmitter(it: Iterator[Tagged],
+                                     statAcc: CollectionAccumulator[SegStatRow],
+                                     maxShard: Int,
                                      fnChunk: Int, recordPositions: Boolean,
                                      indexStemmed: Boolean, indexBigrams: Boolean,
                                      indexTrigrams: Boolean,
@@ -823,10 +847,10 @@ object IndexBuilder {
           }
         }
       }
-      val statRow = Iterator.single(
-        BuildRow("stat", seg, None, None, None,
-          Some(SegStatRow(seg, nDocs.toLong, segTokens, terms.length.toLong,
-            totalPostings, segShaHex, buildMs))))
+      val stat = SegStatRow(seg, nDocs.toLong, segTokens, terms.length.toLong,
+        totalPostings, segShaHex, buildMs)
+      statAcc.add(stat)
+      val statRow = Iterator.single(BuildRow("stat", seg, None, None, None, Some(stat)))
       docRows ++ fnRows ++ postRows ++ statRow
     }
   }

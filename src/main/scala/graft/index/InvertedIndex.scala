@@ -16,9 +16,10 @@ import graft.core._
   * per-segment machinery (mode decode, term lowering, cursors, scoring,
   * merge) is SegmentPass, shared with the driver-local Searcher.
   *
-  * Collection statistics (N, total tokens -> avg fieldnorm, per-term df)
-  * are Catalyst aggregates over the stat/posting tables, per the north
-  * rule. BM25 weights use collection-level stats while per-block max
+  * Collection statistics (N, total tokens -> avg fieldnorm) are
+  * driver-side sums over the stat table, collected once (one row per
+  * segment); per-term df is a Catalyst aggregate over the posting table.
+  * BM25 weights use collection-level stats while per-block max
   * metadata was computed with segment-level stats — the same deliberate
   * approximation as the reference (term_scorer.rs:63-70, which documents
   * that the stored (fieldnorm, tf) argmax under the segment average "may
@@ -54,42 +55,40 @@ final class InvertedIndex private[graft] (spark: SparkSession, dir: String,
     * look up under the wrong keys. */
   private[index] def queryStemmer: String => String = queryStem
 
-  // one DataFrame handle per row kind: every spark.read.parquet call
-  // pays a footer/schema-listing job (~25 ms), and a single search
-  // touches the posting/fnorm/doc tables several times. The instance
-  // already snapshots the directory via its lazy stats/fieldnorm
-  // caches (consumers build a fresh InvertedIndex after an append), so
-  // caching the readers adds no new staleness class.
+  // one DataFrame handle per row kind, read with the known schema
+  // (IndexBuilder.readKind: no footer-inference job). The instance
+  // snapshots the directory via its lazy stats/fieldnorm caches
+  // (consumers build a fresh InvertedIndex after an append), so caching
+  // the readers adds no new staleness class.
   @transient private lazy val dataFrames =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def data(kind: String): DataFrame =
-    dataFrames.computeIfAbsent(kind, k =>
-      spark.read.parquet(s"${IndexBuilder.dataDir(dir)}/kind=$k"))
+    dataFrames.computeIfAbsent(kind, k => IndexBuilder.readKind(spark, dir, k))
 
   def docs: Dataset[DocRow] = data("doc").select("doc.*").as[DocRow]
   def postings: Dataset[PostingRow] = data("posting").select("posting.*").as[PostingRow]
   def fnorms: Dataset[FnormRow] = data("fnorm").select("fnorm.*").as[FnormRow]
   def segStats: Dataset[SegStatRow] = data("stat").select("stat.*").as[SegStatRow]
 
+  /** Every segment's stat row, collected once: the collection stats
+    * and the stored-rank validation both sum it on the driver (one row
+    * per segment — no aggregate job, no exchange). */
+  @transient private[graft] lazy val segStatRows: Array[SegStatRow] = segStats.collect()
+
   /** Build-time global static-rank ordinal table (Config.
     * storeGlobalRank), validated against the CURRENT segment stats —
     * a table left stale by a live-index append or a merge is ignored
     * and rankSignals falls back to its per-query counting pass. */
   @transient private lazy val grankTable: Option[Dataset[GrankRow]] =
-    GlobalRank.load(spark, dir, segStats.collect().toSeq)
+    GlobalRank.load(spark, dir, segStatRows.toSeq)
 
   /** The validated stored ordinal table, if this index has one. */
   def storedGlobalRanks: Option[Dataset[GrankRow]] = grankTable
 
-  lazy val stats: CollectionStats = {
-    // coalesce: sum over ZERO stat rows is null, and the empty-index
-    // guards downstream ask `stats.numDocs == 0` — the graceful path
-    // must not NPE computing the very value it guards on
-    val r = segStats.agg(coalesce(sum($"numDocs"), lit(0L)),
-      coalesce(sum($"numTokens"), lit(0L)), count(lit(1))).head()
-    CollectionStats(r.getLong(0), r.getLong(1), r.getLong(2).toInt)
-  }
+  lazy val stats: CollectionStats =
+    CollectionStats(segStatRows.map(_.numDocs).sum,
+      segStatRows.map(_.numTokens).sum, segStatRows.length)
 
   /** Tokenize + dedup (the reference's clause deduplication,
     * plan/node.rs:276-305) + 32-term cap (parser/mod.rs:17). */
@@ -102,8 +101,7 @@ final class InvertedIndex private[graft] (spark: SparkSession, dir: String,
     // from the chunk metadata; numDocs alone undercounts ~3x for a
     // shadow-field index and the whole point of the cap is the
     // driver's memory
-    val residentBytes = fnorms.agg(coalesce(sum($"numDocs"), lit(0L)))
-      .head().getLong(0)
+    val residentBytes = fnorms.select($"numDocs").as[Int].collect().map(_.toLong).sum
     if (residentBytes == 0L || residentBytes > maxResidentFnormBytes) None
     else Some(spark.sparkContext.broadcast(residentFnormsLocal))
   }

@@ -63,7 +63,7 @@ final case class SegStatRow(segment: Int, numDocs: Long, numTokens: Long,
                             numTerms: Long, numPostings: Long,
                             sha256Agg: String, buildMs: Long)
 
-/** Collection-level statistics (Catalyst aggregates over SegStatRow). */
+/** Collection-level statistics (driver-side sums over the SegStatRows). */
 final case class CollectionStats(numDocs: Long, numTokens: Long, numSegments: Int) {
   def avgFieldNorm: Float = numTokens.toFloat / numDocs.toFloat
 

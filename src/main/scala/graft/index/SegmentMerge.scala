@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, pmod}
 
 import graft.core.{BlockCodec, Bm25Weight, PostingListData, PostingsCursor}
 
@@ -59,7 +59,7 @@ object SegmentMerge {
 
     // bases + merged stats from the stat table (driver-side, tiny);
     // segFilter drops expired segments (live-index TTL compaction)
-    val stats = in.segStats.collect().filter(s => segFilter(s.segment))
+    val stats = in.segStatRows.filter(s => segFilter(s.segment))
       .sortBy(_.segment)
     if (stats.isEmpty) return
     // the merge commits through the SAME staged->adopt->manifest->marker
@@ -143,7 +143,7 @@ object SegmentMerge {
     // independent executions could break the doc-vs-permutation
     // agreement) and skips re-running the corpus-wide sort
     val mappedDF = in.docs.filter(d => segFilter(d.segment)).toDF()
-      .withColumn("newSeg", (col("segment") / org.apache.spark.sql.functions.lit(fanIn)).cast("int"))
+      .withColumn("newSeg", (col("segment") / lit(fanIn)).cast("int"))
       .withColumn("newId", (org.apache.spark.sql.functions.row_number().over(win) - 1).cast("int"))
       .localCheckpoint()
     mappedDF.select(
@@ -170,10 +170,12 @@ object SegmentMerge {
         None, Some(f)))
     val postRows = in.postings.filter(p => segFilter(p.segment)).map(p =>
       MergeRow(newSegOf(p.segment), 1, p.term, p.segment, p.shard, Some(p), None))
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      mergedStats.size)
+    // one task per merged segment: ids old / fanIn of a contiguous input
+    // range are contiguous, so pmod over the range's length is a
+    // bijection (a gap in the ids leaves an empty task, never a shared one)
+    val parts = mergedStats.keys.max - mergedStats.keys.min + 1
     val merged = mapRows.union(fnRows).union(postRows)
-      .repartition(parts, col("segment"))
+      .repartitionById(parts, pmod(col("segment"), lit(parts)))
       .sortWithinPartitions(col("segment"), col("kindOrder"), col("term"),
         col("oldSeg"), col("shard"))
       .mapPartitions { it =>
@@ -212,7 +214,7 @@ object SegmentMerge {
   private def refreshGlobalRank(spark: SparkSession, outDir: String,
                                 cfg: IndexBuilder.Config): Unit =
     if (cfg.storeGlobalRank) {
-      val stats = new InvertedIndex(spark, outDir).segStats.collect().toSeq
+      val stats = new InvertedIndex(spark, outDir).segStatRows.toSeq
       if (stats.nonEmpty && GlobalRank.load(spark, outDir, stats).isEmpty)
         GlobalRank.write(spark, outDir)
     }

@@ -50,14 +50,10 @@ object LiveIndex {
         d.repo, d.path, d.commit, d.lang, d.content, d.props, d.links)
     }
     val staged = s"${IndexBuilder.stagingDir(dir)}/$tag"
-    IndexBuilder.writeSegments(tagged, SegsPerBatch * 2, staged, cfg)
-    // this batch's stats come from the STAGED output before adoption —
-    // re-reading the live dir's whole stat table here grows O(total
-    // batches) per batch over a long-running stream
-    val stats = spark.read.parquet(s"$staged/kind=stat")
-      .select("stat.*").as[SegStatRow]
-      .filter(s => s.segment >= base && s.segment < base + SegsPerBatch)
-      .collect()
+    // the batch's SegsPerBatch ids are consecutive: one task each. The
+    // write job returns this batch's stat rows itself, so nothing is
+    // read back (neither the staged nor the live stat table)
+    val stats = IndexBuilder.writeSegments(tagged, SegsPerBatch, staged, cfg)
     IndexBuilder.adoptStaged(staged, dir, tag)
     stats.foreach { s =>
       val json = s"""{"segment":${s.segment},"numDocs":${s.numDocs},"numTokens":${s.numTokens},"batchId":$batchId}"""

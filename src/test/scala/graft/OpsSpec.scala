@@ -343,12 +343,22 @@ class OpsSpec extends AnyFunSuite {
 
   test("ngramJaccard spread=false emits the same pairs and scores as spread=true") {
     import spark.implicits._
+    // a single-partition input whose size estimate clears
+    // FanOutMinBytes, so the spread=true side really runs fanOut's
+    // repartition while spread=false keeps the one partition; most docs
+    // are all-unique shingles, the first thirty share some
     val df = (
       Seq((1L, "alpha beta gamma delta epsilon zeta"),
           (2L, "alpha beta gamma delta epsilon eta"),
           (3L, "one two three four five six seven")) ++
-      (4L to 30L).map(i => (i, s"shared prefix words here tail$i end$i"))
-    ).toDF("id", "text")
+      (4L to 30L).map(i => (i, s"shared prefix words here tail$i end$i")) ++
+      (31L to 1500L).map(i => (i, s"u${i}a u${i}b u${i}c u${i}d"))
+    ).toDF("id", "text").coalesce(1)
+    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes > TextOps.FanOutMinBytes)
+    assert(df.queryExecution.toRdd.getNumPartitions == 1)
+    assert(TextOps.fanOut(df).queryExecution.toRdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+    assert(spark.sparkContext.defaultParallelism > 1)
     def rows(spread: Boolean) =
       Dedup.ngramJaccard(df, "id", "text", 3, 0.05, spread = spread)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
